@@ -268,9 +268,9 @@ object Bench {
     // Streaming-ingest throughput: N synthetic 3-sheet workbooks through
     // the foreachBatch landing stream (the reference's upload loop end to
     // end — xlsx parse, CDC, upsert, export), reported as tx rows/s in a
-    // "stream" field of the same JSON object so the driver's single-line
-    // parse is unaffected. Skipped only under a query filter (the
-    // SPARK_GRAFT_ONLY fast path times batch queries alone).
+    // "stream_set_based" field of the same JSON object, so a single-line
+    // parse of the output is unaffected. Skipped only under a query filter
+    // (the SPARK_GRAFT_ONLY fast path times batch queries alone).
     var streamFailed = false
     val streamJson = if (only.isDefined) "" else {
       try {
@@ -302,8 +302,8 @@ object Bench {
         val rows = nWb.toLong * txPerWb
         // Round 14 (VERDICT r13 item 5): stream rows are now MIN-OF-2
         // like the batch queries — the single-run figures swung 2–3×
-        // run-to-run on identical code (r12: 19.1 s, r13: 64.7 s for
-        // stream_batched), which made every stream delta unreadable.
+        // run-to-run on identical code (r12: 19.1 s, r13: 64.7 s for the
+        // batched-parse stream), which made every stream delta unreadable.
         // Each run is cold: fresh state/processed/checkpoint dirs (the
         // checkpoint is what makes a re-run a no-op, so it must not be
         // shared) and the same clearCache+GC reset the batch timer uses.
@@ -326,11 +326,6 @@ object Bench {
             q.stop()
             (System.nanoTime() - t0) / 1e9
           }.min
-        val secSeq = runIngest("seq",
-          graft.streaming.StreamingPipeline.workbookStream(_, _, _, _, _))
-        val secBat = runIngest("bat",
-          graft.streaming.StreamingPipeline
-            .workbookStreamBatched(_, _, _, _, _))
         val secSet = runIngest("set",
           graft.streaming.StreamingPipeline
             .workbookStreamSetBased(_, _, _, _, _))
@@ -394,11 +389,7 @@ object Bench {
           gq.stop()
           (System.nanoTime() - tg) / 1e9
         }.min
-        s""","stream":{"workbooks":$nWb,"tx_rows":$rows,"sec":$secSeq,""" +
-          s""""rows_per_sec":${rows / secSeq}},""" +
-          s""""stream_batched":{"workbooks":$nWb,"tx_rows":$rows,""" +
-          s""""sec":$secBat,"rows_per_sec":${rows / secBat}},""" +
-          s""""stream_set_based":{"workbooks":$nWb,"tx_rows":$rows,""" +
+        s""","stream_set_based":{"workbooks":$nWb,"tx_rows":$rows,""" +
           s""""sec":$secSet,"rows_per_sec":${rows / secSet}},""" +
           s""""stream_jsonl":{"docs":$nDocs,"sec":$secJsonl,""" +
           s""""docs_per_sec":${nDocs / secJsonl}},""" +

@@ -902,15 +902,15 @@ private[graft] object EntryHelpers {
       col("c_nationkey").cast("string").as("dob"),
       addr.as("address"),
       (col("c_custkey") * 7).cast("string").as("created_date"),
-      col("c_custkey").as("_row_idx"))
+      col("c_custkey").as("_row_idx"), lit(0).as("_upload_seq"))
     val baseAddr = concat(col("c_mktsegment"), lit(" St "),
       col("c_nationkey").cast("string"))
     val n = cust.count()
-    val id1 = store.recordUpload("batch_1.xlsx", "2026-01-01T00:00:00",
-      0L, n, 0L)
+    val id1 = store.recordUploads(
+      Seq(("batch_1.xlsx", "2026-01-01T00:00:00", 0L, n, 0L)))
     store.applyCustomerBatch(batch(baseAddr), "2026-01-01T00:00:00", id1)
-    val id2 = store.recordUpload("batch_2.xlsx", "2026-01-02T00:00:00",
-      0L, n, 0L)
+    val id2 = store.recordUploads(
+      Seq(("batch_2.xlsx", "2026-01-02T00:00:00", 0L, n, 0L)))
     val changed = when(col("c_custkey") % 3 === 0,
       concat(baseAddr, lit("B"))).otherwise(baseAddr)
     store.applyCustomerBatch(batch(changed), "2026-01-02T00:00:00", id2)

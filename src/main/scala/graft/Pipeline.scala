@@ -39,7 +39,7 @@ class Pipeline(spark: SparkSession, stateDir: String, processedDir: String,
   val store = new StateStore(spark, stateDir)
   Files.createDirectories(Paths.get(processedDir))
 
-  val RequiredSheets = Set("Transactions", "Customers", "Products")
+  val RequiredSheets = Seq("Transactions", "Customers", "Products")
 
   /** S3: the reference accepts only .xlsx uploads (app.py:55-56). */
   def allowedFile(filename: String): Boolean =
@@ -56,60 +56,83 @@ class Pipeline(spark: SparkSession, stateDir: String, processedDir: String,
     val filename = Paths.get(workbookPath).getFileName.toString
     require(allowedFile(filename), s"not an xlsx: $filename")
 
-    val sheets = Xlsx.readSheets(spark, workbookPath)
-    runBatchSheets(sheets, filename, timestamp)
+    val sheets = Xlsx.readSheets(spark, workbookPath).view
+      .mapValues(_.withColumn("_source", lit(workbookPath))).toMap
+    applyBatch(Seq(workbookPath), sheets, timestamp).head
   }
 
-  /** Same micro-batch against already-materialized sheet frames — the
-    * entry the batched landing stream uses after its one distributed
-    * parse across all of a micro-batch's workbooks
-    * ([[graft.streaming.StreamingPipeline.workbookStreamBatched]]): per
-    * workbook it passes filtered views of the shared parse output
-    * instead of re-parsing on the driver.
+  /** One stateful micro-batch over N workbooks, in file order: the single
+    * path by which a workbook reaches state, whether [[runBatch]] parsed
+    * one on the driver or the set-based landing stream parsed many on
+    * the executors
+    * ([[graft.streaming.StreamingPipeline.workbookStreamSetBased]]).
+    *
+    *  1. S2 + row counts: one aggregate over the three sheets; every file
+    *     must carry each required sheet with at least its header row, or
+    *     the batch fails before ANY state is touched;
+    *  2. one [[StateStore.recordUploads]] append (dense ids in file order);
+    *  3. one customer parse, tagged `_upload_seq` by file position;
+    *  4. one CDC + upsert ([[StateStore.applyCustomerBatch]] — equal to
+    *     applying the files one by one);
+    *  5. the per-file stateless [[renderBatch]] tail.
+    *
+    * @param paths  the batch's workbooks in file order, as tagged in
+    *               `_source`
+    * @param sheets sheet name → `_source`, `_row_idx`, `_c0..` rows of
+    *               every workbook in the batch; a missing key is a sheet
+    *               absent from every file
     */
-  def runBatchSheets(sheets: Map[String, DataFrame], filename: String,
-                     timestamp: String = LocalDateTime.now().toString)
-      : BatchResult = {
-    require(RequiredSheets.subsetOf(sheets.keySet),          // S2
-      "File must contain Transactions, Customers, and Products sheets.")
+  private[graft] def applyBatch(paths: Seq[String],
+                                sheets: Map[String, DataFrame],
+                                timestamp: String): Seq[BatchResult] = {
+    val counts: Map[(String, String), Long] =
+      RequiredSheets.filter(sheets.contains)
+        .map(s => sheets(s).select(lit(s).as("_sheet"), col("_source")))
+        .reduceOption(_ unionByName _).toSeq
+        .flatMap(_.groupBy("_sheet", "_source").count().collect())
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    for (p <- paths; s <- RequiredSheets)                          // S2
+      require(counts.getOrElse((s, p), 0L) > 0,
+        s"File must contain Transactions, Customers, and Products " +
+          s"sheets. ($p: $s missing or empty)")
 
-    val txRaw = sheets("Transactions")
-    val custRaw = sheets("Customers")
-    val prodRaw = sheets("Products")
-
-    // A5 + S6: per-sheet data row counts (minus header), dense upload id.
-    val uploadId = store.recordUpload(filename, timestamp,
-      txRaw.count() - 1, custRaw.count() - 1, prodRaw.count() - 1)
+    // A5 + S6: per-sheet data row counts (minus header), dense upload ids.
+    val uploadIds = store.recordUploads(paths.map { p =>
+      (Paths.get(p).getFileName.toString, timestamp,
+        counts(("Transactions", p)) - 1, counts(("Customers", p)) - 1,
+        counts(("Products", p)) - 1)
+    })
 
     // P1-P9: skip header row, parse packed records, keep file order.
     // Cached for the batch: the CDC/upsert layer and the analytics chain
     // materialize it several times; the cache is dropped before returning
     // (post-return re-reads of the BatchResult frames re-derive lazily).
     val parsed = Relational.parseCustomers(
-        custRaw.where(col("_row_idx") > 0), "_c0",
-        passthrough = Seq("_row_idx"))
+        sheets("Customers").where(col("_row_idx") > 0), "_c0",
+        passthrough = Seq("_row_idx", "_source"))
+      .withColumn("_upload_seq",
+        array_position(array(paths.map(lit): _*), col("_source")).cast("int") - 1)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try runBatchImpl(parsed, txRaw, prodRaw, timestamp, uploadId)
-    finally parsed.unpersist(blocking = false)
-  }
-
-  private def runBatchImpl(parsed: DataFrame, txRaw: DataFrame,
-                           prodRaw: DataFrame, timestamp: String,
-                           uploadId: Long): BatchResult = {
-    // J3 + S7 + S8: CDC capture + last-wins upsert.
-    val nChanges = store.applyCustomerBatch(parsed, timestamp, uploadId)
-    renderBatch(parsed, txRaw, prodRaw, uploadId, nChanges)
+    try {
+      // J3 + S7 + S8: CDC capture + last-wins upsert for the whole batch.
+      val nChanges = store.applyCustomerBatch(
+        parsed.drop("_source"), timestamp, uploadIds)
+      paths.zip(uploadIds).map { case (p, id) =>
+        def own(df: DataFrame) =
+          df.where(col("_source") === p).drop("_source", "_upload_seq")
+        renderBatch(own(parsed), own(sheets("Transactions")),
+          own(sheets("Products")), id, nChanges(id))
+      }
+    } finally parsed.unpersist(blocking = false)
   }
 
   /** The stateless tail of a micro-batch — joins, aggregates, ranked
-    * outputs, xlsx export — for a file whose STATE effects (upload
-    * metadata, CDC, upsert) were already applied, possibly as part of a
-    * whole-micro-batch set-based application
-    * ([[graft.state.StateStore.applyCustomerBatchMulti]]).
+    * outputs, xlsx export — for one file whose STATE effects (upload
+    * metadata, CDC, upsert) [[applyBatch]] already applied.
     */
-  private[graft] def renderBatch(parsed: DataFrame, txRaw: DataFrame,
-                                 prodRaw: DataFrame, uploadId: Long,
-                                 nChanges: Long): BatchResult = {
+  private def renderBatch(parsed: DataFrame, txRaw: DataFrame,
+                          prodRaw: DataFrame, uploadId: Long,
+                          nChanges: Long): BatchResult = {
     // P10-P11: header promotion; the batch's own (possibly duplicated)
     // customer view joins the analytics — not the deduped state table
     // (app.py:132 uses the parsed frame; SURVEY.md §7.4.2).

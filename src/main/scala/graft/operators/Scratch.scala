@@ -114,12 +114,9 @@ private[graft] object Scratch {
     // Accumulate-until-reclaim (round-14 ADVICE): reset the counter only
     // when the GC actually fires — N sub-threshold slices must still add
     // up to a reclaim once their dead shuffle files total the threshold,
-    // matching the "since the last reclaim" scaladoc (the old
-    // getAndSet(0) dropped sub-threshold scratch on the floor every
-    // call, leaving only the 30-min periodic-GC backstop).
-    if (c.get() >= thr) {
-      c.set(0L)
-      System.gc()
-    }
+    // matching the "since the last reclaim" scaladoc. The check and the
+    // reset are one compare-and-set, so of two concurrent slices only one
+    // fires, and bytes recorded meanwhile are never zeroed uncounted.
+    if (c.getAndUpdate(b => if (b >= thr) 0L else b) >= thr) System.gc()
   }
 }

@@ -94,50 +94,22 @@ object Xlsx {
     * from executors (shared/distributed filesystem — true wherever a real
     * cluster would land uploads).
     *
+    * Each workbook's sheet is parsed ONCE into a persisted
+    * variable-width cells frame; the batch-wide sheet width is the max
+    * cell count over those SAME parsed rows, so a later, wider workbook
+    * widens the scan for every file by construction (ADVICE r7) without
+    * a separate probe parse; the cells are then projected into columns.
+    *
     * Output: `_source` (path), `_row_idx` within its workbook, and
-    * `_c0.._c{width-1}` raw strings — the same shape `promoteHeader`
-    * consumes, plus provenance.
+    * `_c0.._c{width-1}` raw strings — the shape `promoteHeader`
+    * consumes, plus provenance. Returns the projected frame and a
+    * cleanup thunk that releases the cached parse — call it when the
+    * batch is done with the sheet.
     *
     * Deliberately lenient: a workbook missing `sheet` contributes zero
     * rows rather than failing the whole many-file scan (XlsxSpec pins
-    * this); validate sheet names upstream if absence means
-    * misconfiguration rather than heterogeneity.
-    */
-  def readSheetAcrossWorkbooks(spark: SparkSession, paths: Seq[String],
-                               sheet: String, width: Int): DataFrame = {
-    val schema = StructType(
-      StructField("_source", StringType, nullable = false) +:
-      StructField("_row_idx", LongType, nullable = false) +:
-      (0 until width).map(i => StructField(s"_c$i", StringType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    import spark.implicits._
-    spark.createDataset(paths)
-      .repartition(math.max(1, math.min(paths.size, 64)))
-      .mapPartitions { it =>
-        it.flatMap { p =>
-          read(p, wanted = Some(sheet)).headOption.map(_._2)
-            .getOrElse(Vector.empty)
-            .zipWithIndex.map { case (r, i) =>
-              Row.fromSeq(p +: (i.toLong +: (0 until width).map(j =>
-                if (j < r.length) r(j) else null)))
-            }
-        }
-      }(enc)
-  }
-
-  /** One-pass auto-width twin of [[readSheetAcrossWorkbooks]]: parses
-    * each workbook's sheet ONCE into a persisted variable-width cells
-    * frame, derives the batch-wide sheet width from those SAME parsed
-    * rows (max cell count — so the ADVICE-r7 "a later, wider workbook
-    * must widen the scan" guarantee holds by construction, no separate
-    * probe parse), then projects the array into `_c0.._cN` columns.
-    * The previous two-pass shape (a distributed per-(path, sheet)
-    * width probe followed by a second full `readSheetAcrossWorkbooks`
-    * parse) read every workbook twice per micro-batch and halved
-    * landing-stream throughput.
-    *
-    * Returns the projected frame and a cleanup thunk that releases the
-    * cached parse — call it when the batch is done with the sheet.
+    * this); validate sheet presence downstream, as
+    * [[graft.Pipeline]]'s S2 check does.
     */
   def readSheetAcrossWorkbooksAuto(spark: SparkSession, paths: Seq[String],
                                    sheet: String)
@@ -255,7 +227,7 @@ object Xlsx {
     * returned (sorted) paths to preserve partition order.
     *
     * A shard missing the wanted sheet (or its header) fails the merge
-    * loudly — unlike [[readSheetAcrossWorkbooks]]'s deliberate leniency,
+    * loudly — unlike [[readSheetAcrossWorkbooksAuto]]'s deliberate leniency,
     * a merge that silently dropped a shard's rows would hand back a
     * short deliverable with no signal. Cell typing: [[read]] surfaces
     * every cell as a raw string (the module-wide contract), so merged

@@ -54,25 +54,11 @@ class StateStore(spark: SparkSession, dir: String,
   def addressChangesOrdered: DataFrame =
     addressChanges.orderBy(desc("change_timestamp"), desc("id"))
 
-  /** S6: append upload metadata; returns the dense autoincrement id
-    * (driver-side single-writer sequence — NOT
-    * `monotonically_increasing_id`, which is neither dense nor stable).
-    */
-  def recordUpload(filename: String, timestamp: String, txRows: Long,
-                   custRows: Long, prodRows: Long): Long = {
-    val nextId = uploads.agg(coalesce(max("id"), lit(0L))).head().getLong(0) + 1
-    val row = spark.createDataFrame(
-      java.util.List.of(
-        Row(nextId, filename, timestamp, txRows, custRows, prodRows)),
-      Tables.uploadsSchema)
-    backend.append("uploads", row)
-    nextId
-  }
-
-  /** S6 batched: append N upload rows in ONE write with dense ids in
-    * sequence order — the multi-workbook form of [[recordUpload]] used
-    * by the set-based landing stream (one metadata append per
-    * micro-batch instead of one per file).
+  /** S6: append N upload rows in ONE write with dense ids in sequence
+    * order — a driver-side single-writer sequence (the reference's
+    * AUTOINCREMENT, app.py:89), NOT `monotonically_increasing_id`, which
+    * is neither dense nor stable. One metadata append per micro-batch;
+    * a single upload passes one element.
     *
     * @param metas (filename, timestamp, txRows, custRows, prodRows) in
     *              file order
@@ -97,22 +83,15 @@ class StateStore(spark: SparkSession, dir: String,
   def uploadDigests: DataFrame =
     backend.read("upload_digests", Tables.uploadDigestsSchema)
 
-  /** Records one ingested workbook's content digest. Appended AFTER the
-    * batch's state effects commit, so a crash between the two replays
-    * the batch (at-least-once) rather than silently dropping it.
-    */
-  def recordUploadDigest(digest: String, uploadId: Long,
-                         filename: String, timestamp: String): Unit =
-    backend.append("upload_digests", spark.createDataFrame(
-      java.util.List.of(Row(digest, uploadId, filename, timestamp)),
-      Tables.uploadDigestsSchema))
-
-  /** Batched [[recordUploadDigest]]: ONE backend append for a whole
-    * micro-batch's survivor digests. The single write is what makes the
-    * digest-gated landing's at-least-once claim hold: the landing sink
-    * overwrites its per-batch dir on replay, so a per-file digest loop
-    * that crashes midway would anti-join out the recorded files on
-    * replay and rewrite the batch dir WITHOUT their documents. With one
+  /** Records ingested files' content digests, appended AFTER their
+    * state effects commit, so a crash between the two replays the files
+    * (at-least-once) rather than silently dropping them. ONE backend
+    * append for a whole micro-batch's survivor digests. The single write
+    * is what makes the digest-gated landing's at-least-once claim hold:
+    * the landing sink overwrites its per-batch dir on replay, so a
+    * per-file digest loop that crashes midway would anti-join out the
+    * recorded files on replay and rewrite the batch dir WITHOUT their
+    * documents. With one
     * append the ledger update is all-or-nothing relative to the batch
     * replay — either no digest committed (full reprocess) or all (full
     * skip).
@@ -136,112 +115,49 @@ class StateStore(spark: SparkSession, dir: String,
   }
 
   /** J3 + S7 + S8 (app.py:110-123): CDC against *mutating intra-batch
-    * state* plus last-writer-wins upsert, set-based.
+    * state* plus last-writer-wins upsert, set-based, for a micro-batch of
+    * N workbooks' customer rows concatenated in file order — ONE CDC pass
+    * and ONE customers swap however many files the batch holds.
     *
-    * For the k-th occurrence of a customer in file order, the "old"
-    * address is the (k-1)-th occurrence's address, or the stored state for
-    * k=1 — expressed as `coalesce(lag(address) over file-order, stored)`.
-    * A change row is emitted whenever old exists and differs, so repeat
+    * For the k-th occurrence of a customer in (file, row) order, the
+    * "old" address is the (k-1)-th occurrence's address, or the stored
+    * state for k=1 — `coalesce(lag(address) over (_upload_seq,
+    * _row_idx), stored)`. File k's first occurrence therefore lags to
+    * file k−1's last one: exactly the stored state a sequential per-file
+    * application would have seen after file k−1's upsert, so one call
+    * over N files equals N one-file calls (StateStoreSpec asserts it). A
+    * change row is emitted whenever old exists and differs, so repeat
     * uploads of a file with intra-batch duplicates re-toggle addresses
     * every time (4 changes then 8 per repeat on the reference sample —
     * deliberately non-idempotent, SURVEY.md §7.4.3).
     *
-    * @param batch parsed customer rows carrying `_row_idx` (file order)
-    * @return number of change rows captured
-    */
-  /** Note: this method materializes `batch` three times (change count,
-    * change write, upsert write) — callers whose batch lineage is
-    * expensive (e.g. a workbook parse) should persist it for the call
-    * and unpersist afterwards, as [[graft.Pipeline.runBatch]] does;
-    * caching is deliberately caller-owned so an already-cached frame is
-    * not clobbered here.
-    */
-  def applyCustomerBatch(batch: DataFrame, timestamp: String,
-                         uploadId: Long): Long = {
-    val occ = Window.partitionBy("customer_id").orderBy("_row_idx")
-    val stored = customers.select(col("customer_id"),
-      col("address").as("_stored_address"))
-    val withOld = batch
-      .join(stored, Seq("customer_id"), "left")
-      .withColumn("_old",
-        coalesce(lag("address", 1).over(occ), col("_stored_address")))
-
-    val changes = withOld
-      .where(col("_old").isNotNull && col("_old") =!= col("address"))
-      .select(col("customer_id"), col("_old").as("old_address"),
-        col("address").as("new_address"),
-        lit(timestamp).as("change_timestamp"),
-        lit(uploadId).as("upload_id"), col("_row_idx"))
-
-    // Crash consistency across the two tables: the change append commits
-    // BEFORE the customers rewrite, so a crash between them leaves
-    // orphaned change rows for this upload id; the per-file ledger then
-    // replays the batch under the SAME upload id, and this rewrite
-    // absorbs the orphans instead of double-logging them (change ids
-    // stay dense and the log reflects the attempt that actually updated
-    // the state). Normal operation pays only the take-1 probe — the
-    // rewrite runs on replay alone. Cross-table atomicity beyond this
-    // needs a transactional table format (a [[StateBackend]] drop-in).
-    if (!addressChanges.where(col("upload_id") === uploadId).isEmpty)
-      backend.rewrite("address_changes",
-        addressChanges.where(col("upload_id") =!= uploadId))
-
-    // Dense change ids in file order. The unpartitioned window only ever
-    // sees this batch's change rows (a per-batch trickle), not the corpus.
-    val maxId =
-      addressChanges.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
-    val idd = changes.withColumn("id",
-        (lit(maxId) + row_number().over(Window.orderBy("_row_idx")))
-          .cast("long"))
-      .select(Tables.addressChangesSchema.fieldNames.toSeq.map(col): _*)
-
-    val nChanges = idd.count()
-    if (nChanges > 0)
-      backend.append("address_changes", idd)
-
-    // S7 upsert: last occurrence in file order wins within the batch.
-    val lastWins = batch
-      .withColumn("_rn",
-        row_number().over(
-          Window.partitionBy("customer_id").orderBy(desc("_row_idx"))))
-      .where(col("_rn") === 1)
-      .select(col("customer_id"), col("name"), col("email"), col("dob"),
-        col("address"), col("created_date"), lit(uploadId).as("upload_id"))
-    val newState = customers
-      .join(lastWins.select("customer_id"), Seq("customer_id"), "left_anti")
-      .unionByName(lastWins)
-
-    backend.rewrite("customers", newState)
-    nChanges
-  }
-
-  /** Multi-workbook form of [[applyCustomerBatch]]: applies a whole
-    * micro-batch's customer rows — N workbooks, concatenated in file
-    * order — with ONE CDC pass and ONE customers swap, instead of N
-    * sequential swaps. This is the SURVEY §2.3 J3 lag-chain extended
-    * across files: the occurrence window orders by
-    * (`_upload_seq`, `_row_idx`), so file k's first occurrence of a
-    * customer lags to file k−1's last occurrence — exactly the stored
-    * state a sequential per-file application would have seen after file
-    * k−1's upsert. Provably equivalent to folding [[applyCustomerBatch]]
-    * over the files (StateStoreSpec asserts the equivalence, and the
-    * 4-then-8 re-toggle contract holds across the batch boundary).
+    * Change rows attribute to the upload id of the file they occurred in;
+    * change ids stay dense in (file, row) order; the last-wins upsert
+    * winner carries its own file's upload id.
     *
-    * Change rows attribute to the upload id of the file they occurred
-    * in; change ids stay dense in (file, row) order; the last-wins
-    * upsert winner carries its own file's upload id — all identical to
-    * the sequential fold. Crash consistency: orphan absorption matches
-    * on the batch's whole upload-id set, so an at-least-once replay of
-    * the micro-batch absorbs every file's orphaned change rows at once.
+    * Crash consistency: the change append commits BEFORE the customers
+    * rewrite. Change rows already logged under one of `uploadIds` are
+    * replaced, not appended to, so re-applying a batch under the SAME
+    * upload ids does not double-log. The pipeline does not replay that
+    * way: [[recordUploads]] allocates fresh ids on every attempt, so a
+    * crash between the two writes leaves the failed attempt's uploads
+    * row and change rows behind, and the replay logs its changes again
+    * under new ids. Cross-table atomicity needs a transactional table
+    * format (a [[StateBackend]] drop-in).
+    *
+    * `batch` is materialized several times (change count, change write,
+    * upsert write); callers whose batch lineage is expensive (a workbook
+    * parse) persist it for the call, as [[graft.Pipeline]] does — caching
+    * is caller-owned so an already-cached frame is not clobbered here.
     *
     * @param batch parsed customer rows carrying `_upload_seq` (0-based
-    *              file index within the batch) and `_row_idx`
+    *              file index within the batch) and `_row_idx` (file order)
     * @param uploadIds upload id per `_upload_seq`, in file order
     * @return change-row count per upload id (0 for files with none)
     */
-  def applyCustomerBatchMulti(batch: DataFrame, timestamp: String,
-                              uploadIds: Seq[Long]): Map[Long, Long] = {
-    require(uploadIds.nonEmpty, "applyCustomerBatchMulti: no uploads")
+  def applyCustomerBatch(batch: DataFrame, timestamp: String,
+                         uploadIds: Seq[Long]): Map[Long, Long] = {
+    require(uploadIds.nonEmpty, "applyCustomerBatch: no uploads")
     val idForSeq = element_at(
       array(uploadIds.map(lit): _*), col("_upload_seq") + 1).cast("long")
     val occ = Window.partitionBy("customer_id")
@@ -260,10 +176,14 @@ class StateStore(spark: SparkSession, dir: String,
         lit(timestamp).as("change_timestamp"),
         idForSeq.as("upload_id"), col("_upload_seq"), col("_row_idx"))
 
+    // Normal operation pays only this take-1 probe; the rewrite runs only
+    // when a caller re-applies under upload ids that already logged rows.
     if (!addressChanges.where(col("upload_id").isin(uploadIds: _*)).isEmpty)
       backend.rewrite("address_changes",
         addressChanges.where(!col("upload_id").isin(uploadIds: _*)))
 
+    // Dense change ids in (file, row) order. The unpartitioned window only
+    // ever sees this batch's change rows (a per-batch trickle).
     val maxId =
       addressChanges.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
     val idd = changes.withColumn("id",

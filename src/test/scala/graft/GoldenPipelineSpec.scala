@@ -119,8 +119,63 @@ class GoldenPipelineSpec extends AnyFunSuite {
       Seq("Transactions" -> Seq(("a", "b")).toDF("c1", "c2")))
     val e = intercept[IllegalArgumentException] { p.runBatch(wb) }
     assert(e.getMessage.contains("must contain"))
+    // all three sheets present, but Customers has no rows at all (not
+    // even its header): rejected before an uploads row is written
+    val full = SampleWorkbook.write(spark, s"$tmp/full.xlsx", tx = 20,
+      customers = 5, dupes = 1).path
+    val empty = s"$tmp/empty_customers.xlsx"
+    withEmptySheet(full, empty, "xl/worksheets/sheet2.xml")
+    assert(graft.sources.Xlsx.read(empty).toMap.get("Customers") ===
+      Some(Vector.empty))
+    val e2 = intercept[IllegalArgumentException] { p.runBatch(empty) }
+    assert(e2.getMessage.contains("must contain"))
     // nothing was recorded against state on the failed batches
     assert(p.store.uploads.count() === 0)
+    assert(p.store.customers.count() === 0)
+  }
+
+  /** Copies workbook `src` to `dst` with worksheet part `part` emptied. */
+  private def withEmptySheet(src: String, dst: String, part: String): Unit = {
+    import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+    val in = new ZipFile(src)
+    val out = new ZipOutputStream(new java.io.FileOutputStream(dst))
+    try in.entries().asIterator().forEachRemaining { e =>
+      out.putNextEntry(new ZipEntry(e.getName))
+      out.write(
+        if (e.getName == part)
+          ("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+            """<worksheet xmlns="http://schemas.openxmlformats.org/""" +
+            """spreadsheetml/2006/main"><sheetData/></worksheet>""")
+            .getBytes("UTF-8")
+        else in.getInputStream(e).readAllBytes())
+      out.closeEntry()
+    } finally { out.close(); in.close() }
+  }
+
+  test("seeded sample: repeat uploads re-toggle (4 then 8), dense ids, " +
+       "3-sheet export") {
+    val tmp = Files.createTempDirectory("graft_golden_f").toString
+    val wb = SampleWorkbook.write(spark, s"$tmp/Txn_Details.xlsx")
+    val p = new Pipeline(spark, s"$tmp/state", s"$tmp/processed")
+    val rs = (1 to 3).map(i =>
+      p.runBatch(wb.path, timestamp = s"2026-01-0${i}T00:00:00"))
+    assert(rs.map(_.nChanges) === Seq(4L, 8L, 8L))
+    assert(rs.map(_.uploadId) === Seq(1L, 2L, 3L))
+    assert(rs.head.merged.count() === wb.mergedRows)
+    assert(rs.head.summary.count() === wb.distinctCustomers.toLong)
+    assert(p.store.customers.count() === wb.distinctCustomers.toLong)
+    val up = p.store.uploadsOrdered.head()
+    assert((up.getAs[Long]("id"), up.getAs[Long]("transactions_rows"),
+            up.getAs[Long]("customers_rows"),
+            up.getAs[Long]("products_rows")) === ((3L, 1000L, 104L, 8L)))
+    assert(p.store.addressChanges.select("id").collect()
+      .map(_.getLong(0)).sorted.toSeq === (1L to 20L))
+    val sheets = graft.sources.Xlsx.read(s"$tmp/processed/processed_1.xlsx")
+    assert(sheets.map(_._1) ===
+      Seq("CategoryTotalsSummary", "TopSpenders", "MergedData"))
+    assert(sheets.head._2.head === Vector("customer_id", "name", "amount", "rank"))
+    assert(sheets.head._2.length === 1 + wb.distinctCustomers)
+    assert(sheets(2)._2.length === 1 + wb.mergedRows)
   }
 
   test("golden: processed xlsx export round-trips the rank table") {

@@ -112,9 +112,11 @@ class PropertySpec extends AnyFunSuite {
       (s"C$i", s"n$i", s"e$i", "1990", s"addr-$i", "100", i.toLong)
     }.toDF("customer_id", "name", "email", "dob", "address",
            "created_date", "_row_idx")
-    assert(store.applyCustomerBatch(batch, "t1", 1) === 0)
+      .withColumn("_upload_seq", org.apache.spark.sql.functions.lit(0))
+    assert(store.applyCustomerBatch(batch, "t1", Seq(1L)) === Map(1L -> 0L))
     val s1 = store.customers.orderBy("customer_id").collect().map(_.toSeq.take(6))
-    assert(store.applyCustomerBatch(batch, "t2", 2) === 0)  // replay: no CDC
+    // replay: no CDC
+    assert(store.applyCustomerBatch(batch, "t2", Seq(2L)) === Map(2L -> 0L))
     val s2 = store.customers.orderBy("customer_id").collect().map(_.toSeq.take(6))
     assert(s1.toSeq === s2.toSeq)
     assert(store.customers.count() === 100)

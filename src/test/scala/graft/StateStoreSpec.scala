@@ -18,11 +18,21 @@ class StateStoreSpec extends AnyFunSuite {
       (id, s"name-$id", s"$id@x", "1990", addr, "100", idx) }
       .toDF("customer_id", "name", "email", "dob", "address",
             "created_date", "_row_idx")
+      .withColumn("_upload_seq", org.apache.spark.sql.functions.lit(0))
+
+  /** One file's batch as a one-element micro-batch; its change count. */
+  private def applyOne(s: StateStore, b: org.apache.spark.sql.DataFrame,
+                       ts: String, uploadId: Long): Long =
+    s.applyCustomerBatch(b, ts, Seq(uploadId))(uploadId)
+
+  private def recordOne(s: StateStore, filename: String, ts: String,
+                        tx: Long, cust: Long, prod: Long): Long =
+    s.recordUploads(Seq((filename, ts, tx, cust, prod))).head
 
   test("swap recovery: a crash between the two renames loses no state") {
     val dir = Files.createTempDirectory("graft_state_rec")
     val s = new StateStore(spark, dir.toString)
-    s.applyCustomerBatch(batch(("C1", "addr-1", 1L)), "t1", 1)
+    applyOne(s, batch(("C1", "addr-1", 1L)), "t1", 1)
     assert(s.customers.count() === 1)
 
     // Simulate the crash window of swapWrite: the new state sits fully
@@ -66,9 +76,9 @@ class StateStoreSpec extends AnyFunSuite {
     }
     val s = new StateStore(spark, dir.toString, Some(wrapped))
     assert(calls.headOption === Some("recoverAll"))
-    val id = s.recordUpload("f.xlsx", "t1", 10L, 2L, 3L)
+    val id = recordOne(s, "f.xlsx", "t1", 10L, 2L, 3L)
     assert(id === 1L)
-    val n = s.applyCustomerBatch(
+    val n = applyOne(s,
       batch(("C1", "a1", 1L), ("C1", "a2", 2L)), "t1", id)
     assert(n === 1L)                      // intra-batch toggle captured
     assert(s.customers.count() === 1L)    // last-wins upsert through it
@@ -81,8 +91,7 @@ class StateStoreSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(dir.resolve("customers")))
   }
 
-  test("applyCustomerBatchMulti is equivalent to folding applyCustomerBatch " +
-       "over the files, in one state application") {
+  test("one N-file applyCustomerBatch equals N one-file calls") {
     import org.apache.spark.sql.functions.{col, lit}
     // Three files with cross-file toggles, intra-file duplicates, a
     // fresh customer mid-batch, and a customer untouched after file 1.
@@ -94,8 +103,8 @@ class StateStoreSpec extends AnyFunSuite {
     // Sequential fold (the reference semantics).
     val seqStore = newStore()
     val seqIds = files.zipWithIndex.map { case (f, i) =>
-      val id = seqStore.recordUpload(s"f$i.xlsx", "t", 1, 1, 1)
-      id -> seqStore.applyCustomerBatch(f, "t", id)
+      val id = recordOne(seqStore, s"f$i.xlsx", "t", 1, 1, 1)
+      id -> applyOne(seqStore, f, "t", id)
     }
 
     // One set-based application of the concatenated batch.
@@ -104,7 +113,7 @@ class StateStoreSpec extends AnyFunSuite {
       files.indices.map(i => (s"f$i.xlsx", "t", 1L, 1L, 1L)))
     val concat = files.zipWithIndex.map { case (f, i) =>
       f.withColumn("_upload_seq", lit(i)) }.reduce(_ unionByName _)
-    val counts = multiStore.applyCustomerBatchMulti(concat, "t", ids)
+    val counts = multiStore.applyCustomerBatch(concat, "t", ids)
 
     assert(ids === seqIds.map(_._1))
     assert(counts === seqIds.toMap)
@@ -123,7 +132,7 @@ class StateStoreSpec extends AnyFunSuite {
     // replay absorption works on the whole id set: re-applying the same
     // concatenated batch under the same ids does not double-log
     val before = multiStore.addressChanges.count()
-    multiStore.applyCustomerBatchMulti(concat, "t2", ids)
+    multiStore.applyCustomerBatch(concat, "t2", ids)
     assert(multiStore.addressChanges
       .where(col("upload_id").isin(ids: _*)).count() >= before)
     assert(multiStore.addressChanges.groupBy("id").count()
@@ -135,9 +144,9 @@ class StateStoreSpec extends AnyFunSuite {
     // C1 appears twice with different addresses: 1 intra-batch change,
     // final state = second address (mirrors the reference sample's
     // duplicate-id behavior, app.py:110-123)
-    val n1 = s.applyCustomerBatch(
+    val n1 = applyOne(s,
       batch(("C1", "addr-A", 0), ("C2", "addr-X", 1), ("C1", "addr-B", 2)),
-      "t1", uploadId = 1)
+      "t1", 1)
     assert(n1 === 1)
     val state = s.customers.collect().map(r =>
       r.getAs[String]("customer_id") -> r.getAs[String]("address")).toMap
@@ -145,9 +154,9 @@ class StateStoreSpec extends AnyFunSuite {
 
     // replay the same batch: stored addr-B vs first occurrence addr-A →
     // change; then A→B again → second change. 2 changes per replay.
-    val n2 = s.applyCustomerBatch(
+    val n2 = applyOne(s,
       batch(("C1", "addr-A", 0), ("C2", "addr-X", 1), ("C1", "addr-B", 2)),
-      "t2", uploadId = 2)
+      "t2", 2)
     assert(n2 === 2)
     assert(s.addressChanges.count() === 3)
     // ids dense in file order
@@ -160,20 +169,21 @@ class StateStoreSpec extends AnyFunSuite {
 
   test("ledger replay under the SAME upload id absorbs orphaned changes") {
     val s = newStore()
-    s.applyCustomerBatch(batch(("C1", "addr-A", 0)), "t1", uploadId = 1)
-    s.applyCustomerBatch(batch(("C1", "addr-B", 0)), "t2", uploadId = 2)
+    applyOne(s, batch(("C1", "addr-A", 0)), "t1", 1)
+    applyOne(s, batch(("C1", "addr-B", 0)), "t2", 2)
     assert(s.addressChanges.count() === 1)
-    // A crash between the change append and the customers swap makes the
-    // ledger replay the batch under the same upload id; the second
-    // attempt must replace upload 2's rows, not double-log them.
-    s.applyCustomerBatch(batch(("C1", "addr-C", 0)), "t2b", uploadId = 2)
+    // A caller re-applying under the same upload id (a retry after a crash
+    // between the change append and the customers swap) must replace
+    // upload 2's rows, not double-log them. The pipeline itself retries
+    // under fresh ids, so this holds for direct StateStore callers only.
+    applyOne(s, batch(("C1", "addr-C", 0)), "t2b", 2)
     val rows = s.addressChanges.orderBy("id").collect().map(r =>
       (r.getAs[Long]("id"), r.getAs[Long]("upload_id"),
        r.getAs[String]("new_address"))).toSeq
     // upload 2 appears once (the replayed attempt), ids still dense
     assert(rows === Seq((1L, 2L, "addr-C")))
     // a NEW upload id appends as usual (cross-upload non-idempotence)
-    s.applyCustomerBatch(batch(("C1", "addr-D", 0)), "t3", uploadId = 3)
+    applyOne(s, batch(("C1", "addr-D", 0)), "t3", 3)
     assert(s.addressChanges.count() === 2)
     assert(s.addressChanges.orderBy("id").collect()
       .map(_.getAs[Long]("id")).toSeq === Seq(1L, 2L))
@@ -181,24 +191,24 @@ class StateStoreSpec extends AnyFunSuite {
 
   test("no change rows for brand-new customers or unchanged addresses") {
     val s = newStore()
-    assert(s.applyCustomerBatch(batch(("C1", "a", 0)), "t1", 1) === 0)
-    assert(s.applyCustomerBatch(batch(("C1", "a", 0)), "t2", 2) === 0)
-    assert(s.applyCustomerBatch(batch(("C1", "b", 0)), "t3", 3) === 1)
+    assert(applyOne(s, batch(("C1", "a", 0)), "t1", 1) === 0)
+    assert(applyOne(s, batch(("C1", "a", 0)), "t2", 2) === 0)
+    assert(applyOne(s, batch(("C1", "b", 0)), "t3", 3) === 1)
   }
 
   test("recordUpload: dense driver-side sequence, ordered audit scan") {
     val s = newStore()
-    assert(s.recordUpload("f1.xlsx", "2026-01-01T00:00:00", 10, 2, 3) === 1L)
-    assert(s.recordUpload("f2.xlsx", "2026-01-02T00:00:00", 11, 2, 3) === 2L)
-    assert(s.recordUpload("f3.xlsx", "2026-01-03T00:00:00", 12, 2, 3) === 3L)
+    assert(recordOne(s, "f1.xlsx", "2026-01-01T00:00:00", 10, 2, 3) === 1L)
+    assert(recordOne(s, "f2.xlsx", "2026-01-02T00:00:00", 11, 2, 3) === 2L)
+    assert(recordOne(s, "f3.xlsx", "2026-01-03T00:00:00", 12, 2, 3) === 3L)
     assert(s.uploadsOrdered.select("filename").collect()
       .map(_.getString(0)).toSeq === Seq("f3.xlsx", "f2.xlsx", "f1.xlsx"))
   }
 
   test("upsert retains prior upload_id only for untouched customers") {
     val s = newStore()
-    s.applyCustomerBatch(batch(("C1", "a", 0), ("C2", "b", 1)), "t1", 1)
-    s.applyCustomerBatch(batch(("C2", "b2", 0)), "t2", 2)
+    applyOne(s, batch(("C1", "a", 0), ("C2", "b", 1)), "t1", 1)
+    applyOne(s, batch(("C2", "b2", 0)), "t2", 2)
     val byId = s.customers.collect().map(r =>
       r.getAs[String]("customer_id") -> r.getAs[Long]("upload_id")).toMap
     assert(byId === Map("C1" -> 1L, "C2" -> 2L))

@@ -330,23 +330,30 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("workbook landing stream drives the stateful pipeline via foreachBatch") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val dir = Files.createTempDirectory("graft_wbstream").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/Txn_Details.xlsx"))
+  /** A fresh dir with an empty `landing` subdir, for one stream test. */
+  private def landingDir(prefix: String): (String, String) = {
+    val dir = Files.createTempDirectory(prefix).toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/landing"))
+    (dir, s"$dir/landing")
+  }
 
-    val q = StreamingPipeline.workbookStream(spark, landing,
+  test("workbook landing stream drives the stateful pipeline via foreachBatch") {
+    val (dir, landing) = landingDir("graft_wbstream")
+    val wb = SampleWorkbook.write(spark, s"$landing/Txn_Details.xlsx")
+
+    val q = StreamingPipeline.workbookStreamSetBased(spark, landing,
       s"$dir/state", s"$dir/processed", s"$dir/ckpt")
     try {
       q.processAllAvailable()
       val store = new graft.state.StateStore(spark, s"$dir/state")
       assert(store.uploads.count() === 1L)
-      assert(store.customers.count() === 100L)
-      assert(store.addressChanges.count() === 4L)
+      val up = store.uploads.head()
+      assert((up.getAs[Long]("transactions_rows"),
+              up.getAs[Long]("customers_rows"),
+              up.getAs[Long]("products_rows")) ===
+        ((wb.txRows.toLong, wb.custRows.toLong, wb.prodRows.toLong)))
+      assert(store.customers.count() === wb.distinctCustomers.toLong)
+      assert(store.addressChanges.count() === wb.dupes.toLong)
       // restart-safety: nothing reprocessed on an empty trigger
       q.processAllAvailable()
       assert(store.uploads.count() === 1L)
@@ -356,16 +363,14 @@ class StreamingSpec extends AnyFunSuite {
   test("idempotent workbook stream: identical bytes skip (any name, any " +
        "micro-batch); new content re-ingests") {
     import spark.implicits._
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val dir = Files.createTempDirectory("graft_wbidem").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/Txn_Details.xlsx"))
+    val (dir, landing) = landingDir("graft_wbidem")
+    val sample = SampleWorkbook.write(spark, s"$dir/Txn_Details.xlsx").path
+    def land(name: String): Unit =
+      Files.copy(java.nio.file.Paths.get(sample),
+        java.nio.file.Paths.get(s"$landing/$name"))
+    land("Txn_Details.xlsx")
     // byte-identical copy under a DIFFERENT name, same micro-batch
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/Txn_Details_copy.xlsx"))
+    land("Txn_Details_copy.xlsx")
 
     val q = StreamingPipeline.workbookStreamIdempotent(spark, landing,
       s"$dir/state", s"$dir/processed", s"$dir/ckpt")
@@ -379,8 +384,7 @@ class StreamingSpec extends AnyFunSuite {
 
       // byte-identical re-upload in a LATER micro-batch, third name:
       // the persistent ledger (not the in-batch set) must skip it
-      Files.copy(java.nio.file.Paths.get(sample),
-        java.nio.file.Paths.get(s"$landing/Txn_Details_again.xlsx"))
+      land("Txn_Details_again.xlsx")
       q.processAllAvailable()
       assert(store.uploads.count() === 1L)
       assert(store.addressChanges.count() === changes1)
@@ -507,25 +511,20 @@ class StreamingSpec extends AnyFunSuite {
 
   test("workbook stream defaults to the sharded MergedData export past " +
        "the row threshold; mergeShards reassembles one deliverable") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val dir = Files.createTempDirectory("graft_wbshard").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/Txn_Details.xlsx"))
+    val (dir, landing) = landingDir("graft_wbshard")
+    val wb = SampleWorkbook.write(spark, s"$landing/Txn_Details.xlsx")
 
-    // Threshold 100 << the sample's ~1k merged rows: the streaming path
+    // Threshold 100 << the workbook's ~1k merged rows: the streaming path
     // must activate the executor-side sharded writer on its own.
-    val q = StreamingPipeline.workbookStream(spark, landing,
+    val q = StreamingPipeline.workbookStreamSetBased(spark, landing,
       s"$dir/state", s"$dir/processed", s"$dir/ckpt",
       shardThreshold = 100L)
     try q.processAllAvailable() finally q.stop()
 
-    val wb = s"$dir/processed/processed_1.xlsx"
-    assert(Files.exists(java.nio.file.Paths.get(wb)))
+    val out = s"$dir/processed/processed_1.xlsx"
+    assert(Files.exists(java.nio.file.Paths.get(out)))
     // The single workbook carries ONLY the bounded sheets…
-    val sheets = graft.sources.Xlsx.read(wb).map(_._1)
+    val sheets = graft.sources.Xlsx.read(out).map(_._1)
     assert(sheets.toSet === Set("CategoryTotalsSummary", "TopSpenders"))
     // …and the input-sized sheet landed as executor-written shards.
     val shardDir = s"$dir/processed/processed_1_MergedData_shards"
@@ -535,65 +534,63 @@ class StreamingSpec extends AnyFunSuite {
     val shardRows = shards.map(p =>
       graft.sources.Xlsx.read(p, wanted = Some("MergedData"))
         .head._2.length - 1L).sum
-    assert(shardRows === 1041L)  // golden merged-row count, no header
+    assert(wb.mergedRows > wb.txRows)  // the m:m duplicate inflation
+    assert(shardRows === wb.mergedRows)  // no header rows counted
 
     // mergeShards: one deliverable, header once, all rows, in order.
     val mergedPath = s"$dir/processed/merged_all.xlsx"
     graft.sources.Xlsx.mergeShards(shards, mergedPath, "MergedData")
     val rows = graft.sources.Xlsx.read(mergedPath,
       wanted = Some("MergedData")).head._2
-    assert(rows.length - 1L === 1041L)
+    assert(rows.length - 1L === wb.mergedRows)
     assert(rows.head.count(_ == "transaction_id") === 1)
   }
 
-  test("batched-parse workbook stream reaches the same state as the " +
-       "per-file stream, including CDC re-toggle sequencing") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val dir = Files.createTempDirectory("graft_wbstream_b").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    // Two copies of the SAME workbook in one micro-batch: the second
-    // must re-toggle addresses against the state the first left behind
-    // (4 then 8 change rows — the reference's non-idempotent repeat
-    // semantics), which only holds if the batched parse still applies
-    // workbooks strictly sequentially.
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/a_Txn_Details.xlsx"))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/b_Txn_Details.xlsx"))
-
-    val q = StreamingPipeline.workbookStreamBatched(spark, landing,
+  test("set-based workbook stream: N files in one micro-batch reach the " +
+       "state and exports of N sequential runBatch calls") {
+    import org.apache.spark.sql.functions.col
+    // Three workbooks over one customer pool: customers recur across
+    // files at new addresses, and each file has its own duplicates, so
+    // the CDC lag-chain must cross every file boundary.
+    val (dir, landing) = landingDir("graft_wbstream_n")
+    val paths = (1 to 3).map { i =>
+      SampleWorkbook.write(spark, s"$landing/wb_$i.xlsx", seed = i,
+        tx = 300, customers = 60, dupes = 3, pool = 80).path
+    }
+    val q = StreamingPipeline.workbookStreamSetBased(spark, landing,
       s"$dir/state", s"$dir/processed", s"$dir/ckpt")
-    try {
-      q.processAllAvailable()
-      val store = new graft.state.StateStore(spark, s"$dir/state")
-      assert(store.uploads.count() === 2L)
-      assert(store.customers.count() === 100L)
-      assert(store.addressChanges.count() === 12L)  // 4 + 8
-      assert(store.addressChanges
-        .where(org.apache.spark.sql.functions.col("upload_id") === 1L)
-        .count() === 4L)
-      // restart-safety: nothing reprocessed on an empty trigger
-      q.processAllAvailable()
-      assert(store.uploads.count() === 2L)
-    } finally q.stop()
+    try q.processAllAvailable() finally q.stop()
+
+    val seq = new Pipeline(spark, s"$dir/seq_state", s"$dir/seq_processed")
+    paths.foreach(p => seq.runBatch(p))
+
+    val batched = new graft.state.StateStore(spark, s"$dir/state")
+    def rows(df: org.apache.spark.sql.DataFrame, drop: String*) =
+      df.drop(drop: _*).collect().map(_.toSeq).toSet
+    assert(batched.uploads.count() === 3L)
+    assert(rows(batched.uploads, "timestamp") ===
+      rows(seq.store.uploads, "timestamp"))
+    assert(rows(batched.addressChanges, "change_timestamp") ===
+      rows(seq.store.addressChanges, "change_timestamp"))
+    assert(batched.addressChanges.where(col("upload_id") > 1L).count() > 0L)
+    assert(rows(batched.customers) === rows(seq.store.customers))
+    (1 to 3).foreach { id =>
+      val name = s"processed_$id.xlsx"
+      assert(graft.sources.Xlsx.read(s"$dir/processed/$name") ===
+        graft.sources.Xlsx.read(s"$dir/seq_processed/$name"), name)
+    }
   }
 
-  test("set-based workbook stream: one state application per micro-batch " +
-       "reaches the sequential stream's exact state, incl. 4-then-8 toggles") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val dir = Files.createTempDirectory("graft_wbstream_s").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    // Same two-copies-in-one-micro-batch shape as the batched-parse test:
-    // the CDC lag-chain must span the file boundary so the second copy
-    // re-toggles against the first's last occurrences — now with ONE
-    // customers swap and ONE uploads append for the whole batch.
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/a_Txn_Details.xlsx"))
-    Files.copy(java.nio.file.Paths.get(sample),
+  test("set-based workbook stream: two copies in one micro-batch toggle " +
+       "4 then 8 addresses under one state application") {
+    val (dir, landing) = landingDir("graft_wbstream_s")
+    // Two copies of the SAME workbook in one micro-batch: the CDC
+    // lag-chain must span the file boundary so the second copy
+    // re-toggles against the first's last occurrences (the reference's
+    // non-idempotent repeat semantics) — with ONE customers swap and ONE
+    // uploads append for the whole batch.
+    val wb = SampleWorkbook.write(spark, s"$landing/a_Txn_Details.xlsx")
+    Files.copy(java.nio.file.Paths.get(wb.path),
       java.nio.file.Paths.get(s"$landing/b_Txn_Details.xlsx"))
 
     val q = StreamingPipeline.workbookStreamSetBased(spark, landing,
@@ -602,7 +599,7 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       val store = new graft.state.StateStore(spark, s"$dir/state")
       assert(store.uploads.count() === 2L)
-      assert(store.customers.count() === 100L)
+      assert(store.customers.count() === wb.distinctCustomers.toLong)
       assert(store.addressChanges.count() === 12L)  // 4 + 8
       assert(store.addressChanges
         .where(org.apache.spark.sql.functions.col("upload_id") === 1L)
@@ -622,13 +619,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("set-based workbook stream survives a full restart: the ledger " +
        "makes at-least-once redelivery a no-op, new files still land") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val dir = Files.createTempDirectory("graft_wbstream_r").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/a_Txn_Details.xlsx"))
+    val (dir, landing) = landingDir("graft_wbstream_r")
+    val wb = SampleWorkbook.write(spark, s"$landing/a_Txn_Details.xlsx")
 
     val q1 = StreamingPipeline.workbookStreamSetBased(spark, landing,
       s"$dir/state", s"$dir/processed", s"$dir/ckpt")
@@ -647,7 +639,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(store.uploads.count() === 1L)
       assert(store.addressChanges.count() === 4L)
       // and a genuinely new file still lands, sequenced after the first
-      Files.copy(java.nio.file.Paths.get(sample),
+      Files.copy(java.nio.file.Paths.get(wb.path),
         java.nio.file.Paths.get(s"$landing/b_Txn_Details.xlsx"))
       q2.processAllAvailable()
       assert(store.uploads.count() === 2L)

@@ -40,7 +40,7 @@ class XlsxSpec extends AnyFunSuite {
     assert(rows(2).isNullAt(2))
   }
 
-  test("readSheetAcrossWorkbooks: executors parse many workbooks in parallel") {
+  test("readSheetAcrossWorkbooksAuto: many workbooks parse in parallel") {
     val dir = Files.createTempDirectory("graft_multiwb")
     val paths = (1 to 3).map { i =>
       val p = dir.resolve(s"wb$i.xlsx").toString
@@ -48,19 +48,19 @@ class XlsxSpec extends AnyFunSuite {
       Xlsx.write(p, Seq("Data" -> df, "Other" -> Seq(("z", "z")).toDF("x", "y")))
       p
     }
-    val got = Xlsx.readSheetAcrossWorkbooks(spark, paths, "Data", width = 2)
-    assert(got.columns.toSeq === Seq("_source", "_row_idx", "_c0", "_c1"))
-    // 3 workbooks × (header + 2 data rows)
-    assert(got.count() === 9L)
-    val byFile = got.collect().groupBy(_.getString(0))
-    assert(byFile.size === 3)
-    paths.zipWithIndex.foreach { case (p, i) =>
-      val rows = byFile(p).sortBy(_.getLong(1)).map(_.toSeq.drop(2))
-      assert(rows.toSeq === Seq(Seq("h1", "h2"),
-        Seq(s"a${i + 1}", s"b${i + 1}"), Seq(s"c${i + 1}", s"d${i + 1}")))
-    }
-    // a sheet name absent from every workbook yields no rows, not a crash
-    assert(Xlsx.readSheetAcrossWorkbooks(spark, paths, "Nope", 2).count() === 0L)
+    val (got, done) = Xlsx.readSheetAcrossWorkbooksAuto(spark, paths, "Data")
+    try {
+      assert(got.columns.toSeq === Seq("_source", "_row_idx", "_c0", "_c1"))
+      // 3 workbooks × (header + 2 data rows)
+      assert(got.count() === 9L)
+      val byFile = got.collect().groupBy(_.getString(0))
+      assert(byFile.size === 3)
+      paths.zipWithIndex.foreach { case (p, i) =>
+        val rows = byFile(p).sortBy(_.getLong(1)).map(_.toSeq.drop(2))
+        assert(rows.toSeq === Seq(Seq("h1", "h2"),
+          Seq(s"a${i + 1}", s"b${i + 1}"), Seq(s"c${i + 1}", s"d${i + 1}")))
+      }
+    } finally done()
   }
 
   test("readSheetAcrossWorkbooksAuto: a wider LATER workbook widens the " +
@@ -145,14 +145,21 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("reads the reference sample workbook shape") {
+    // The seeded test workbook always; the reference's own sample too
+    // when it is present.
     val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val sheets = Xlsx.read(sample).toMap
-    assert(sheets.keySet === Set("Transactions", "Customers", "Products"))
-    assert(sheets("Transactions").length === 1001)  // header + 1000
-    assert(sheets("Customers").length === 105)      // header + 104
-    assert(sheets("Products").length === 9)         // header + 8
-    // packed record format in the customers sheet
-    assert(sheets("Customers")(1)(0).startsWith("{"))
+    val seeded = SampleWorkbook.write(spark, Files.createTempDirectory(
+      "graft_sample").resolve("Txn_Details.xlsx").toString).path
+    val paths = seeded +:
+      Seq(sample).filter(p => Files.exists(java.nio.file.Paths.get(p)))
+    paths.foreach { p =>
+      val sheets = Xlsx.read(p).toMap
+      assert(sheets.keySet === Set("Transactions", "Customers", "Products"))
+      assert(sheets("Transactions").length === 1001)  // header + 1000
+      assert(sheets("Customers").length === 105)      // header + 104
+      assert(sheets("Products").length === 9)         // header + 8
+      // packed record format in the customers sheet
+      assert(sheets("Customers")(1)(0).startsWith("{"))
+    }
   }
 }
